@@ -22,6 +22,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from openlogparse_spark.functions.cache import release_on_gc
+from openlogparse_spark.functions.pairs import (
+    id_index, log_route, pair_kernel, positions, upper_triangle, use_kernel)
 
 # shuffle exchanges only: "Exchange hashpartitioning(...)", "Exchange
 # rangepartitioning(...)", "Exchange RoundRobinPartitioning(...)",
@@ -122,15 +124,11 @@ def shingles(df: DataFrame, n: int = 3, text_col: str = "text",
 # up the expression tree; fall back to the anti-join + window plan instead
 _HOT_SHINGLE_LITERAL_LIMIT = 1024
 
-# jaccard_pairs inverted-index kernel guard: the exact-pairwise operator is
-# the documented small/medium-corpus path (minhash_lsh_pairs is the web-scale
-# one), so up to this many documents the whole (doc, shingle) incidence —
-# ~n_docs x ~50 rows of small ints after factorization — is collected once,
-# broadcast as a CSR inverted index, and candidate counting runs as a per-doc
-# posting-list merge in numpy. Above it (or on a derived lineage whose size
-# is unknowable without an eager pass) the shingle self-join plan runs
-# instead — no blind driver collects.
-_JACCARD_INDEX_MAX_DOCS = 200_000
+# collect + broadcast bytes per document of the jaccard_pairs inverted-index
+# kernel: ~52 distinct 3-word shingles per fixture document, each collected
+# as an Arrow (id, ~16-char shingle) row (~1.5 KB/doc) and broadcast as two
+# int32 CSR entries (~0.4 KB/doc)
+_JACCARD_BYTES_PER_DOC = 2_048
 
 
 def _jaccard_index_pairs(sets: DataFrame, threshold: float,
@@ -140,9 +138,9 @@ def _jaccard_index_pairs(sets: DataFrame, threshold: float,
     Replaces the shingle self-join + pair aggregation (measured at sf1.0:
     127M joined rows into a ~40M-group hash aggregate, 10-20 s) with: one
     collect of the factorized (doc, shingle) incidence (2.6M rows, ~40 MB),
-    and a mapInPandas kernel where each task walks its documents' posting
-    lists — Σ df(s)²/2 integer appends, the same asymptotic work as the join,
-    at numpy speed and with NO pair shuffle at all (only above-threshold
+    and a kernel where each task walks its documents' posting lists —
+    Σ df(s)²/2 integer appends, the same asymptotic work as the join, at
+    numpy speed and with NO pair shuffle at all (only above-threshold
     survivors leave the kernel). The df cap drops over-cap shingles from
     every document before sizes are taken — byte-identical semantics to the
     array_except branch. The kernel emits integer (n_inter, sz_a, sz_b) with
@@ -151,37 +149,28 @@ def _jaccard_index_pairs(sets: DataFrame, threshold: float,
     import logging
 
     import numpy as np
+    import pyarrow.compute as pc
 
-    spark = sets.sparkSession
-    pdf = sets.select("id", F.explode_outer("sh_arr").alias("shingle")).toPandas()
+    inc = sets.select("id", F.explode_outer("sh_arr").alias("shingle")).toArrow()
+    ids = id_index(inc.column("id"))
+    codes = inc.column("shingle").combine_chunks().dictionary_encode()
+    s = np.asarray(pc.fill_null(codes.indices, -1), dtype=np.int64)
+    d = positions(ids, inc.column("id"))
     # docs with empty sets surface as a NULL shingle row — they cannot pair
-    null_mask = pdf["shingle"].notna()
-    ids_all = pdf["id"].to_numpy(np.int64)
-    import pandas as pd
-
-    codes, _uniq = pd.factorize(pdf["shingle"][null_mask], sort=False)
-    doc_codes, uniq_ids = pd.factorize(ids_all[null_mask.to_numpy()], sort=False)
-    uniq_ids = np.asarray(uniq_ids, dtype=np.int64)
-    # local doc index in ascending doc-id order so j > i  <=>  id_b > id_a
-    order = np.argsort(uniq_ids, kind="stable")
-    rank = np.empty_like(order)
-    rank[order] = np.arange(len(order))
-    ids_sorted = uniq_ids[order]
-    d = rank[doc_codes].astype(np.int64)
-    s = codes.astype(np.int64)
-    n_sh = int(s.max()) + 1 if len(s) else 0
+    ok = (s >= 0) & (d >= 0)
+    d, s = d[ok], s[ok]
+    n_sh = len(codes.dictionary)
     if max_shingle_df is not None and n_sh:
-        df_counts = np.bincount(s, minlength=n_sh)
-        hot = df_counts > max_shingle_df
+        hot = np.bincount(s, minlength=n_sh) > max_shingle_df
         if hot.any():
             logging.getLogger(__name__).warning(
                 "jaccard_pairs: df cap %d drops %d distinct shingles",
                 max_shingle_df, int(hot.sum()))
             keep = ~hot[s]
             d, s = d[keep], s[keep]
-    n_docs = len(ids_sorted)
+    n_docs = len(ids)
     sizes = np.bincount(d, minlength=n_docs).astype(np.int64)
-    # postings: for each shingle, ascending doc indices
+    # postings: for each shingle, ascending doc positions
     po = np.lexsort((d, s))
     post_docs = d[po].astype(np.int32)
     post_off = np.concatenate(([0], np.cumsum(np.bincount(s[po], minlength=n_sh)))).astype(np.int64)
@@ -189,25 +178,18 @@ def _jaccard_index_pairs(sets: DataFrame, threshold: float,
     do = np.argsort(d, kind="stable")
     doc_sh = s[do].astype(np.int32)
     doc_off = np.concatenate(([0], np.cumsum(sizes))).astype(np.int64)
-    bc = spark.sparkContext.broadcast(
-        (ids_sorted, sizes, post_docs, post_off, doc_sh, doc_off))
     margin = threshold - 1e-6   # round(x,6) moves x by <= 5e-7 + ulp
 
-    def kernel(batches):
-        import pyarrow as pa
-
-        idx = bc.value
+    def kernel(batches, idx):
         ids_s, sz, pdocs, poff, dsh, doff = idx
-        out_a, out_b, out_i, out_sa, out_sb = [], [], [], [], []
-        for bdf in batches:
-            for i in bdf.column(0).to_numpy():
+        for rb in batches:
+            for i in rb.column(0).to_numpy():
                 lo, hi = doff[i], doff[i + 1]
                 if hi == lo:
                     continue
                 parts = []
                 for sh_id in dsh[lo:hi]:
-                    p0, p1 = poff[sh_id], poff[sh_id + 1]
-                    seg = pdocs[p0:p1]
+                    seg = pdocs[poff[sh_id]:poff[sh_id + 1]]
                     # only partners j > i (each pair counted once, by its
                     # smaller-id side)
                     k = np.searchsorted(seg, i, side="right")
@@ -215,37 +197,23 @@ def _jaccard_index_pairs(sets: DataFrame, threshold: float,
                         parts.append(seg[k:])
                 if not parts:
                     continue
-                cat = np.concatenate(parts)
-                u, c = np.unique(cat, return_counts=True)
-                raw = c / (sz[i] + sz[u] - c)
-                keep = raw >= margin
-                if not keep.any():
-                    continue
-                u, c = u[keep], c[keep]
-                out_a.append(np.full(len(u), ids_s[i]))
-                out_b.append(ids_s[u])
-                out_i.append(c)
-                out_sa.append(np.full(len(u), sz[i]))
-                out_sb.append(sz[u])
-        if out_a:
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(np.concatenate(a).astype(np.int64, copy=False))
-                 for a in (out_a, out_b, out_i, out_sa, out_sb)],
-                ["id_a", "id_b", "n_inter", "sz_a", "sz_b"])
+                u, c = np.unique(np.concatenate(parts), return_counts=True)
+                keep = c / (sz[i] + sz[u] - c) >= margin
+                if keep.any():
+                    u, c = u[keep], c[keep]
+                    yield (ids_s, np.full(len(u), i), u, c,
+                           np.full(len(u), sz[i]), sz[u])
 
-    par = max(8, spark.sparkContext.defaultParallelism * 2)
-    docs_df = spark.range(n_docs).toDF("i").repartition(par)
-    cand = docs_df.mapInArrow(
-        kernel,
-        schema="id_a long, id_b long, n_inter long, sz_a long, sz_b long")
-    return (
-        cand.withColumn(
+    return pair_kernel(
+        sets.sparkSession, n_docs, kernel, sets.schema["id"].dataType,
+        "n_inter long, sz_a long, sz_b long",
+        payload=(ids, sizes, post_docs, post_off, doc_sh, doc_off),
+        finish=lambda cand: cand.withColumn(
             "jaccard",
             F.round(F.col("n_inter")
                     / (F.col("sz_a") + F.col("sz_b") - F.col("n_inter")), 6))
         .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+        .select("id_a", "id_b", "jaccard"))
 
 
 def jaccard_pairs(df: DataFrame, n: int = 3, threshold: float = 0.8,
@@ -279,7 +247,11 @@ def jaccard_pairs(df: DataFrame, n: int = 3, threshold: float = 0.8,
     shuffles; a df-table join + re-size window here measured 8x wall at
     sf0.1). Only a pathological corpus (> _HOT_SHINGLE_LITERAL_LIMIT hot
     shingles) pays for the join+window plan, which is correct at any
-    hot-list size."""
+    hot-list size.
+
+    Route: a capped build on a bare scan whose inverted index fits
+    pairs.KERNEL_BUDGET_BYTES runs the broadcast kernel of
+    _jaccard_index_pairs instead of the self-join (same rows)."""
     import logging
 
     # document frequency is bounded by the document count, so the cap cannot
@@ -290,20 +262,19 @@ def jaccard_pairs(df: DataFrame, n: int = 3, threshold: float = 0.8,
     # persisted sets below (one job that doubles as the cache warm-up),
     # never an eager count of the raw lineage.
     n_docs = _cheap_count(df) if max_shingle_df is not None else None
-    if n_docs is not None and n_docs <= _JACCARD_INDEX_MAX_DOCS:
-        # small/medium corpus with a knowable size: broadcast inverted-index
-        # kernel — no self-join, no pair shuffle, no probe job, no persist.
-        # Only reached for CAPPED builds on bare scans, which were already
-        # eager at build time (the cap probe); the uncapped call keeps its
-        # fully-lazy join plan (pinned by
-        # test_jaccard_probe_goes_through_the_cache).
-        if n_docs <= max_shingle_df:
-            max_shingle_df = None
-        sets = _shingle_sets(_widen(df), n, text_col, id_col)
-        return _jaccard_index_pairs(sets, threshold, max_shingle_df)
     if n_docs is not None and n_docs <= max_shingle_df:
         max_shingle_df = None
     sets = _shingle_sets(_widen(df), n, text_col, id_col)
+    # small/medium corpus with a knowable size: broadcast inverted-index
+    # kernel — no self-join, no pair shuffle, no probe job, no persist.
+    # Only capped builds on bare scans know their size at build time; the
+    # uncapped call keeps its fully-lazy join plan (pinned by
+    # test_jaccard_probe_goes_through_the_cache).
+    est = None if n_docs is None else n_docs * _JACCARD_BYTES_PER_DOC
+    if use_kernel("jaccard_pairs", est,
+                  "uncapped build stays lazy" if max_shingle_df is None
+                  else "derived input: size unknown without an eager pass"):
+        return _jaccard_index_pairs(sets, threshold, max_shingle_df)
     # persist: BOTH sides of the self-join (and the hot-shingle probe) read
     # this subtree — without it the whole normalize+shingle expansion runs
     # per consumer; measured 10x wall at sf0.1. Keep a handle on the
@@ -475,38 +446,37 @@ _NARROW_SHUFFLE_MIN_DOCS = 200_000
 
 def minhash_lsh_pairs(df: DataFrame, num_hashes: int = 64, bands: int = 16,
                       n: int = 3, threshold: float = 0.5,
-                      text_col: str = "text", id_col: str = "doc_id",
-                      narrow: bool | None = None) -> DataFrame:
+                      text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Candidate near-dup pairs via banded LSH, then verified by estimated
     Jaccard (signature agreement). Returns (id_a, id_b, est_jaccard).
 
-    Two plan shapes, identical answers (pinned by the XXH64 value oracle):
+    Two plan shapes, identical answers (pinned by the XXH64 value oracle),
+    picked by corpus size at _NARROW_SHUFFLE_MIN_DOCS:
 
-    narrow=True — the 100 TB shape (same as lsh_cosine_topk): the band
-    explode and (band, bh) self-join carry only (id, band, bh); signatures
-    stay in the persisted one-row-per-doc table and join back BY ID only
-    for surviving candidates' agreement estimate. At 16 bands a wide
-    banding ships 16 copies of the 512-byte signature per doc through the
-    explode shuffle plus sig_a/sig_b on every candidate row.
+    narrow — the 100 TB shape (same as lsh_cosine_topk): the band explode
+    and (band, bh) self-join carry only (id, band, bh); signatures stay in
+    the persisted one-row-per-doc table and join back BY ID only for
+    surviving candidates' agreement estimate. At 16 bands a wide banding
+    ships 16 copies of the 512-byte signature per doc through the explode
+    shuffle plus sig_a/sig_b on every candidate row.
 
-    narrow=False — the small-corpus shape: signatures ride the banding
-    explode and the single self-join produces (sig_a, sig_b) directly —
-    fewer shuffles, and the payload cost is irrelevant below
-    _NARROW_SHUFFLE_MIN_DOCS (bytes math on the constant).
+    wide — the small-corpus shape: signatures ride the banding explode and
+    the single self-join produces (sig_a, sig_b) directly — fewer shuffles,
+    and the payload cost is irrelevant below the crossover (bytes math on
+    the constant).
 
-    Default (None) auto-selects by corpus size: a bare-scan input is counted
-    directly (cheap column-less pass); a derived input counts the persisted
-    signature table (one job that doubles as the cache warm-up)."""
+    The size comes from a direct count of a bare-scan input (cheap
+    column-less pass), or of the persisted signature table for a derived
+    input (one job that doubles as the cache warm-up)."""
     rows_per_band = num_hashes // bands
     sig = minhash_signatures(df, num_hashes, n, text_col, id_col)
     cached: list[DataFrame] = []
-    if narrow is None:
-        n_docs = _cheap_count(df)
-        if n_docs is None:
-            sig = sig.persist()
-            cached.append(sig)
-            n_docs = sig.count()
-        narrow = n_docs >= _NARROW_SHUFFLE_MIN_DOCS
+    n_docs = _cheap_count(df)
+    if n_docs is None:
+        sig = sig.persist()
+        cached.append(sig)
+        n_docs = sig.count()
+    narrow = n_docs >= _NARROW_SHUFFLE_MIN_DOCS
 
     def banded_cols(extra: list[str]) -> DataFrame:
         return sig.select(
@@ -527,8 +497,8 @@ def minhash_lsh_pairs(df: DataFrame, num_hashes: int = 64, bands: int = 16,
         # both banding sides + both agreement joins read the one-row-per-doc
         # table; persisting it (not the 16x exploded banding) keeps the cache
         # and every shuffle signature-free except the final by-id joins
-        sig = sig.persist()
-        if not any(c is sig for c in cached):
+        if not cached:
+            sig = sig.persist()
             cached.append(sig)
         banded = banded_cols([])
         a, b = banded.alias("a"), banded.alias("b")
@@ -569,8 +539,7 @@ def minhash_lsh_pairs(df: DataFrame, num_hashes: int = 64, bands: int = 16,
     return release_on_gc(out, *cached)
 
 
-def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
-            pack: int = 2) -> DataFrame:
+def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """64-bit SimHash per document (token-level, unweighted).
 
     Pure column algebra: per-token xxhash64 → 64 conditional-sum bit votes in
@@ -578,18 +547,14 @@ def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     per token; 64 agg expressions ship one partial row per doc per partition
     — map-side combined, 64x less shuffle). Sign fold happens after.
 
-    `pack`: bit votes PACKED per 64-bit aggregate buffer (1, 2, or 4) —
-    the default pack=2 keeps 32 sum aggregates with two 32-bit lanes each
-    (per-doc token cap 2^31, i.e. unbounded in practice); pack=4 keeps 16
-    with four 16-bit lanes (cap 65,535 tokens/doc — diagnostic only);
-    pack=1 is the classic one-buffer-per-bit layout. Same signature bits
-    for any pack (pinned by the XXH64 value oracle and a pack-equality
-    test). Measured across 4 fresh sessions at sf0.1 (scripts/
-    simhash_probe.py): steady-state identical (~2.0-2.2 s), but COLD cost
-    drops monotonically with packing (pack1 3.5-4.4 s, pack2 2.9-3.1 s,
-    pack4 2.2-2.8 s ≈ steady) — fewer/smaller agg buffers generate less
-    codegen for the JVM to JIT, which also shrinks the surface for the
-    never-JIT-warms sessions of round-4 verdict #2."""
+    Bit votes are PACKED two per 64-bit aggregate buffer: 32 sum aggregates
+    with two 32-bit lanes each (per-doc token cap 2^31, i.e. unbounded in
+    practice). Measured across 4 fresh sessions at sf0.1: steady state equal
+    to one buffer per bit (~2.0-2.2 s), but the cold pass drops from
+    3.5-4.4 s to 2.9-3.1 s — fewer agg buffers generate less codegen for the
+    JVM to JIT, which also shrinks the surface for the never-JIT-warms
+    sessions of round-4 verdict #2. The bits are pinned by the XXH64 value
+    oracle (tests/test_hash_oracle.py)."""
     toks = _widen(df).select(
         F.col(id_col).alias("id"),
         # explode_outer: see shingles() — the inferred size()>0 filter of a
@@ -602,37 +567,21 @@ def simhash(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     # generates branch-free agg code (~25% faster on this 64-buffer agg,
     # which is big enough to strain codegen); the classic ±1 vote sum v
     # relates by v = 2*popcount - n, so "v > 0" below is "2*popcount > n" —
-    # bit-exact with the Charikar formulation (pinned by the XXH64 value
-    # oracle in tests/test_hash_oracle.py). shiftright on long is
+    # bit-exact with the Charikar formulation. shiftright on long is
     # arithmetic, so (h >> 63) & 1 still reads the sign bit correctly.
-    if pack not in (1, 2, 4):
-        raise ValueError("simhash: pack must be 1, 2, or 4")
-    lane = 64 // pack            # bits per packed vote lane
-
     def bit(b: int):
         return F.shiftright("h", b).bitwiseAND(F.lit(1))
 
-    if pack == 1:
-        aggs = [F.sum(bit(b)).alias(f"v{b}") for b in range(64)]
+    # buffer k holds the popcount of bit 2k in its low lane and of bit 2k+1
+    # shifted to bit 32; lanes cannot carry into each other below 2^32
+    # tokens per doc
+    aggs = [F.sum(bit(2 * k) + F.shiftleft(bit(2 * k + 1), 32)).alias(f"s{k}")
+            for k in range(32)]
 
-        def v(b: int):
-            return F.col(f"v{b}")
-    else:
-        # buffer k sums pack lanes at once: lane j holds the popcount of bit
-        # (k*pack + j), shifted to bit offset j*lane. Lanes cannot carry into
-        # each other below 2^lane tokens per doc.
-        def packed(k: int):
-            term = bit(k * pack)
-            for j in range(1, pack):
-                term = term + F.shiftleft(bit(k * pack + j), j * lane)
-            return F.sum(term).alias(f"s{k}")
-
-        aggs = [packed(k) for k in range(64 // pack)]
-
-        def v(b: int):
-            k, j = divmod(b, pack)
-            return (F.shiftrightunsigned(F.col(f"s{k}"), j * lane)
-                    .bitwiseAND(F.lit((1 << lane) - 1)))
+    def v(b: int):
+        k, j = divmod(b, 2)
+        return (F.shiftrightunsigned(F.col(f"s{k}"), j * 32)
+                .bitwiseAND(F.lit((1 << 32) - 1)))
 
     votes = h.groupBy("id").agg(F.count(F.lit(1)).alias("n"), *aggs)
     # sign fold as a FLAT array + interpreted HOF sum, not a 64-deep nested
@@ -679,54 +628,43 @@ def _make_simhash_verify_kernel(n_chunks: int, widths: list[int],
     """Per-partition pairwise Hamming verify over (chunk, cv)-keyed blocks.
 
     Input rows: (id, simhash, chunk, cv), hash-partitioned so every key's
-    rows share a partition. For each key the kernel runs a blockwise numpy
-    all-pairs XOR+popcount over the bucket (the same candidate space the old
-    JVM self-join enumerated, at native vector speed — guide §4.2) and emits
-    only pairs whose Hamming distance clears `max_hamming` AND whose
-    CANONICAL blocking key is this bucket's key. The canonical key of a pair
-    is its lexicographically-first agreeing chunk (single-chunk mode) or
-    chunk-pair (multi-index mode) — by the pigeonhole bound every qualifying
-    pair has one, and exactly one bucket owns it, so the global
-    dropDuplicates (a shuffle of EVERY candidate row — ~1.1e9 at sf1.0)
-    disappears entirely."""
+    rows share a partition. For each key the kernel runs the blockwise
+    upper-triangle loop over the bucket's members in id order (the same
+    candidate space the old JVM self-join enumerated, at native vector
+    speed — guide §4.2) and emits only pairs whose Hamming distance clears
+    `max_hamming` AND whose CANONICAL blocking key is this bucket's key. The
+    canonical key of a pair is its lexicographically-first agreeing chunk
+    (single-chunk mode) or chunk-pair (multi-index mode) — by the pigeonhole
+    bound every qualifying pair has one, and exactly one bucket owns it, so
+    the global dropDuplicates (a shuffle of EVERY candidate row — ~1.1e9 at
+    sf1.0) disappears entirely."""
     import numpy as np
     import pyarrow as pa
+    import pyarrow.compute as pc
 
     offs = np.array(offsets, dtype=np.uint64)
     masks = np.array([(1 << w) - 1 for w in widths], dtype=np.uint64)
-    # bounds the (block x bucket) XOR temp: 1024 x 16.5k uint64 ≈ 135 MB
-    block = 1024
+    bit_cols = np.arange(64, dtype=np.uint64)[None, :]
 
-    def kernel(batches):
+    def kernel(batches, _):
         parts = list(batches)
         if not parts:
             return
-        cols = [np.concatenate([rb.column(k).to_numpy() for rb in parts])
-                if len(parts) > 1 else parts[0].column(k).to_numpy()
-                for k in range(4)]
-        ids = cols[0].astype(np.int64, copy=False)
-        fp = cols[1].astype(np.int64, copy=False).view(np.uint64)
-        chunk = cols[2].astype(np.int64, copy=False)
-        cv = cols[3].astype(np.int64, copy=False)
-        order = np.lexsort((cv, chunk))
-        chunk_s, cv_s = chunk[order], cv[order]
-        bounds = np.flatnonzero(
-            (np.diff(chunk_s) != 0) | (np.diff(cv_s) != 0)) + 1
-        starts = np.concatenate(([0], bounds))
-        ends = np.concatenate((bounds, [len(order)]))
-        out_a, out_b, out_h = [], [], []
-        bit_cols = np.arange(64, dtype=np.uint64)[None, :]
-        for lo, hi in zip(starts, ends):
+        t = pa.Table.from_batches(parts)
+        t = t.take(pc.sort_indices(t, sort_keys=[
+            ("chunk", "ascending"), ("cv", "ascending"), ("id", "ascending")]))
+        ids = t.column("id").combine_chunks()
+        fp = t.column("simhash").to_numpy().view(np.uint64)
+        chunk, cv = t.column("chunk").to_numpy(), t.column("cv").to_numpy()
+        bounds = np.flatnonzero((np.diff(chunk) != 0) | (np.diff(cv) != 0)) + 1
+        for lo, hi in zip(np.concatenate(([0], bounds)),
+                          np.concatenate((bounds, [len(fp)]))):
             m = hi - lo
             if m < 2:
                 continue
-            sel = order[lo:hi]
-            g_ids, g_fp = ids[sel], fp[sel]
-            key = int(chunk_s[lo])
-            if agree_chunks == 1:
-                kc1, kc2 = key, None
-            else:
-                kc1, kc2 = divmod(key, n_chunks)
+            g = fp[lo:hi]
+            kc1, kc2 = (int(chunk[lo]), None) if agree_chunks == 1 \
+                else divmod(int(chunk[lo]), n_chunks)
             # Hamming via a ±1 GEMM for all but tiny buckets: unpack each
             # fingerprint to a ±1 float32 row; dot(a,b) = 64 - 2*hamming,
             # integer-valued in fp32 (|sums| <= 64 << 2^24), so the test is
@@ -734,32 +672,17 @@ def _make_simhash_verify_kernel(n_chunks: int, widths: list[int],
             # (memory-bound: ~11 full-matrix passes) vs ~15 GFLOP/s BLAS —
             # ~4x less kernel time. Tiny buckets keep the SWAR path (GEMM
             # call overhead dominates below ~64 rows).
-            use_gemm = m >= 64
-            if use_gemm:
-                pm1 = np.where(
-                    ((g_fp[:, None] >> bit_cols) & np.uint64(1)).astype(bool),
-                    np.float32(1), np.float32(-1))
-                s_min = np.float32(64 - 2 * max_hamming)
-            for i0 in range(0, m, block):
-                i1 = min(i0 + block, m)
-                # upper triangle only: row i is compared against j > i, so
-                # the block spans columns i0+1..
-                if use_gemm:
-                    S = pm1[i0:i1] @ pm1[i0 + 1:].T
-                    hit = S >= s_min
-                else:
-                    tail = g_fp[i0 + 1:]
-                    h = _popcount64(g_fp[i0:i1, None] ^ tail[None, :])
-                    hit = h <= max_hamming
-                # mask j <= i within the block's own triangle
-                r = np.arange(i1 - i0)
-                hit &= np.arange(i0 + 1, m)[None, :] > (i0 + r)[:, None]
-                bi, bj = np.nonzero(hit)
-                if not len(bi):
-                    continue
-                gi, gj = i0 + bi, i0 + 1 + bj
-                fa, fb = g_fp[gi], g_fp[gj]
-                x = fa ^ fb
+            if m >= 64:
+                pm1 = np.where(((g[:, None] >> bit_cols) & np.uint64(1)).astype(bool),
+                               np.float32(1), np.float32(-1))
+
+                def score(i0, i1):
+                    return (64 - pm1[i0:i1] @ pm1[i0 + 1:].T) * 0.5
+            else:
+                def score(i0, i1):
+                    return _popcount64(g[i0:i1, None] ^ g[None, i0 + 1:])
+            for gi, gj, ham in upper_triangle(m, score, lambda h: h <= max_hamming):
+                x = g[gi] ^ g[gj]
                 # canonical check: the pair agrees on this bucket's chunk(s)
                 # by construction; it is canonical iff NO chunk before kc1
                 # agrees, and (multi-index) no chunk strictly between kc1 and
@@ -768,42 +691,24 @@ def _make_simhash_verify_kernel(n_chunks: int, widths: list[int],
                 # ever tested (~half the full agreement matrix).
                 keep = np.ones(len(gi), dtype=bool)
                 for c in range(kc1 if kc2 is None else kc2):
-                    if c == kc1:
-                        continue
-                    keep &= ((x >> offs[c]) & masks[c]) != 0
-                if not keep.any():
-                    continue
-                ia, ib = g_ids[gi[keep]], g_ids[gj[keep]]
-                out_a.append(np.minimum(ia, ib))
-                out_b.append(np.maximum(ia, ib))
-                if use_gemm:
-                    ham = ((64.0 - S[bi[keep], bj[keep]]) * 0.5)
-                else:
-                    ham = h[bi[keep], bj[keep]]
-                out_h.append(ham.astype(np.int32))
-        if out_a:
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(np.concatenate(out_a)),
-                 pa.array(np.concatenate(out_b)),
-                 pa.array(np.concatenate(out_h))],
-                ["id_a", "id_b", "hamming"])
+                    if c != kc1:
+                        keep &= ((x >> offs[c]) & masks[c]) != 0
+                if keep.any():
+                    yield (ids, lo + gi[keep], lo + gj[keep],
+                           ham[keep].astype(np.int32))
 
     return kernel
 
 
 def simhash_near_pairs(df: DataFrame, max_hamming: int = 3,
-                       text_col: str = "text", id_col: str = "doc_id",
-                       n_chunks: int | None = None,
-                       agree_chunks: int | None = None,
-                       pack: int = 2) -> DataFrame:
+                       text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Near-dup candidates: block on simhash bit-chunks, verify exact Hamming.
+    Returns (id_a, id_b, hamming) with id_a < id_b.
 
     Pigeonhole recall guarantee: a pair within Hamming distance h differs in
     at most h chunks, so with n_chunks = h + agree_chunks blocks it MUST
     agree on >= agree_chunks of them — blocking is lossless at the requested
-    distance (n_chunks is derived from max_hamming by default; overriding it
-    below max_hamming + agree_chunks silently drops recall, so it is
-    clamped up).
+    distance.
 
     agree_chunks=2 is the multi-index refinement (the Gong/Manku style
     generalization): block on every PAIR of chunks jointly. Keys are twice
@@ -812,29 +717,28 @@ def simhash_near_pairs(df: DataFrame, max_hamming: int = 3,
     guaranteed by the same pigeonhole argument (sf0.1/h=8: ~880k candidate
     pairs -> ~a few k). agree_chunks=1 is the classic single-chunk blocking
     (coarser keys but (h+2)x fewer exploded rows — faster when the explode
-    dominates). Default (None) auto-selects by corpus size at the
+    dominates). The mode is picked by corpus size at the
     _SIMHASH_MULTI_INDEX_MIN_DOCS crossover; a bare-scan input is counted
     directly (cheap column-less pass), a derived input counts the persisted
     fingerprint table (one job that doubles as the cache warm-up) — never
     an eager pass over a derived raw lineage.
 
-    WIDE blocking on purpose (unlike minhash_lsh_pairs' narrow option): the
+    WIDE blocking on purpose (unlike minhash_lsh_pairs' narrow shape): the
     fingerprint is ONE long — 8 bytes riding the chunk explode and the
     candidate rows, ~45 x 8 B/doc worst case. A narrow (id, chunk, cv) shape
     would save those bytes but pay two extra by-id join-back shuffles for
     the Hamming verify; the payload never dominates at any corpus size, so
     wide is the right shape at 100 TB too (contrast: the 512-byte minhash
-    signature DOES dominate — that operator offers narrow=True)."""
-    s = simhash(df, text_col, id_col, pack=pack)
+    signature DOES dominate)."""
+    s = simhash(df, text_col, id_col)
     cached: list[DataFrame] = []
-    if agree_chunks is None:
-        n_docs = _cheap_count(df)
-        if n_docs is None:
-            s = s.persist()
-            cached.append(s)
-            n_docs = s.count()
-        agree_chunks = 2 if n_docs > _SIMHASH_MULTI_INDEX_MIN_DOCS else 1
-    n_chunks = max(n_chunks or 0, max_hamming + agree_chunks)
+    n_docs = _cheap_count(df)
+    if n_docs is None:
+        s = s.persist()
+        cached.append(s)
+        n_docs = s.count()
+    agree_chunks = 2 if n_docs > _SIMHASH_MULTI_INDEX_MIN_DOCS else 1
+    n_chunks = max_hamming + agree_chunks
     base, rem = divmod(64, n_chunks)
     widths = [base + 1 if c < rem else base for c in range(n_chunks)]
     offsets = [sum(widths[:c]) for c in range(n_chunks)]
@@ -852,13 +756,11 @@ def simhash_near_pairs(df: DataFrame, max_hamming: int = 3,
             )
             for c1 in range(n_chunks) for c2 in range(c1 + 1, n_chunks)
         ]
-    elif agree_chunks == 1:
+    else:
         entries = [
             F.struct(F.lit(c).alias("chunk"), cv(c).cast("long").alias("cv"))
             for c in range(n_chunks)
         ]
-    else:
-        raise ValueError("agree_chunks must be 1 or 2")
     # ONE exchange: hash-partition the exploded blocking rows by key so each
     # bucket's pairwise verify runs in a single task's vectorized kernel.
     # The previous shape — a per-key JVM self-join + a global dropDuplicates
@@ -874,9 +776,13 @@ def simhash_near_pairs(df: DataFrame, max_hamming: int = 3,
         "id", "simhash",
         F.explode(F.array(*entries)).alias("ch"),
     ).select("id", "simhash", "ch.chunk", "ch.cv")
-    n_part = max(8, df.sparkSession.sparkContext.defaultParallelism * 2)
-    kernel = _make_simhash_verify_kernel(
-        n_chunks, widths, offsets, agree_chunks, max_hamming)
-    out = (chunked.repartition(n_part, "chunk", "cv")
-           .mapInArrow(kernel, schema="id_a long, id_b long, hamming int"))
-    return release_on_gc(out, *cached) if cached else out
+    spark = df.sparkSession
+    n_part = max(8, spark.sparkContext.defaultParallelism * 2)
+    log_route("simhash_near_pairs", "kernel",
+              f"agree_chunks={agree_chunks}, hash-partitioned buckets, "
+              "nothing collected or broadcast")
+    return pair_kernel(
+        spark, chunked.repartition(n_part, "chunk", "cv"),
+        _make_simhash_verify_kernel(n_chunks, widths, offsets, agree_chunks,
+                                    max_hamming),
+        s.schema["id"].dataType, "hamming int", cached=cached)

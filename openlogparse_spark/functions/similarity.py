@@ -28,6 +28,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from openlogparse_spark.functions.cache import release_on_gc
+from openlogparse_spark.functions.pairs import (
+    id_index, log_route, pair_kernel, positions, upper_triangle, use_kernel)
 
 
 def _dot(a, b):
@@ -148,50 +150,6 @@ def hyperplane_buckets(
     )
 
 
-def hyperplane_signatures(
-    df: DataFrame,
-    n_planes: int = 8,
-    n_tables: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
-) -> DataFrame:
-    """(id, vec, tbl, bucket): one row per (vector, hash table), carrying the
-    vector for an immediate exact re-rank (see hyperplane_buckets for the
-    narrow variant used when the re-rank joins vectors back by id)."""
-    from openlogparse_spark.functions.dedup import _widen
-
-    df = _widen(df)   # same split-spreading rationale as hyperplane_buckets
-    base = df.select(
-        F.col(id_col).alias("id"), F.col(vec_col).alias("vec"),
-        F.sequence(F.lit(0), F.size(vec_col) - F.lit(1)).alias("__dims"),
-    )
-    tb = F.explode_outer(   # see hyperplane_buckets: inferred-filter trap
-        F.transform(
-            F.sequence(F.lit(0), F.lit(n_tables - 1)),
-            lambda t: F.struct(
-                t.alias("tbl"),
-                _bucket_expr(F.col("vec"), F.col("__dims"), t,
-                             n_planes, seed).alias("bucket"),
-            ),
-        )
-    )
-    return (
-        base.select("id", "vec", tb.alias("s"))
-        .select("id", "vec", F.col("s.tbl").alias("tbl"), F.col("s.bucket").alias("bucket"))
-        .filter(F.col("tbl").isNotNull())
-    )
-
-
-def hyperplane_signature(df: DataFrame, n_planes: int = 16,
-                         id_col: str = "vec_id", vec_col: str = "embedding",
-                         seed: int = 42) -> DataFrame:
-    """Single-table signature (id, vec, bucket) — the L=1 special case."""
-    return hyperplane_signatures(
-        df, n_planes=n_planes, n_tables=1, id_col=id_col, vec_col=vec_col, seed=seed
-    ).drop("tbl")
-
-
 def auto_n_planes(n_vectors: int, threshold: float, n_tables: int = 8,
                   target_recall: float = 0.9, lo: int = 2, hi: int = 16) -> int:
     """Max plane count whose ESTIMATED recall at `threshold` still clears
@@ -218,13 +176,6 @@ def auto_n_planes(n_vectors: int, threshold: float, n_tables: int = 8,
     return min(k_recall, k_occup, hi)
 
 
-# above this corpus size the gather-dot kernel's driver collect + broadcast
-# of the full vector matrix stops being cheap (1M x 64 dims x 8B = 512 MB);
-# the JVM join-back scoring path takes over — it shuffles candidates by id
-# instead of holding the corpus in every worker.
-_GATHER_KERNEL_MAX_VECTORS = 1_000_000
-
-
 def _lsh_block_pairs(df: DataFrame, mat, n_planes: int, n_tables: int,
                      multiprobe: int, seed: int, threshold: float,
                      normalized: bool, id_col: str, vec_col: str) -> DataFrame:
@@ -247,15 +198,13 @@ def _lsh_block_pairs(df: DataFrame, mat, n_planes: int, n_tables: int,
     the join plan (pinned by test_lsh_gemm_path_matches_join_plan)."""
     import numpy as np
 
-    spark = df.sparkSession
-    ids_sorted, V = mat
-    sig_pdf = hyperplane_buckets(
-        df, n_planes, n_tables, id_col, vec_col, seed).toPandas()
-    tb = sig_pdf["tbl"].to_numpy(np.int64)
-    bk = sig_pdf["bucket"].to_numpy(np.int64)
-    rid = np.searchsorted(ids_sorted, sig_pdf["id"].to_numpy(np.int64))
+    ids, V = mat
+    sig = hyperplane_buckets(df, n_planes, n_tables, id_col, vec_col, seed).toArrow()
+    tb = sig.column("tbl").to_numpy().astype(np.int64)
+    bk = sig.column("bucket").to_numpy()
+    rid = positions(ids, sig.column("id"))
     o = np.lexsort((rid, bk, tb))
-    tb, bk, rid = tb[o], bk[o], rid[o].astype(np.int64)
+    tb, bk, rid = tb[o], bk[o], rid[o]
     bnd = np.flatnonzero((np.diff(tb) != 0) | (np.diff(bk) != 0)) + 1
     starts = np.concatenate(([0], bnd)).astype(np.int64)
     ends = np.concatenate((bnd, [len(tb)])).astype(np.int64)
@@ -263,104 +212,91 @@ def _lsh_block_pairs(df: DataFrame, mat, n_planes: int, n_tables: int,
     lookup = {(int(t), int(b)): int(k)
               for k, (t, b) in enumerate(zip(key_t, key_b))}
     if normalized:
-        Vm = V.astype(np.float64)       # raw-dot margin needs f64 headroom
+        Vm = V                          # raw-dot margin needs f64 headroom
         gemm_dtype = np.float64
     else:
         nrm = np.sqrt((V * V).sum(axis=1))
-        safe = np.where(nrm > 0, nrm, 1.0)
-        Vm = (V / safe[:, None]).astype(np.float32)
+        Vm = (V / nrm[:, None]).astype(np.float32)
         gemm_dtype = np.float32
     margin = np.array(threshold - 2e-4, dtype=gemm_dtype)
-    bc = spark.sparkContext.broadcast(
-        (ids_sorted, V, Vm, rid, starts, ends, key_t, key_b, lookup))
     dim = V.shape[1]
 
-    def kernel(batches):
-        import pyarrow as pa
+    def kernel(batches, payload):
+        ids_s, Vf, Vmm, rid_, st, en, kt, kb, lk = payload
 
-        ids_s, Vf, Vmm, rid_, st, en, kt, kb, lk = bc.value
-        out_a, out_b, out_d = [], [], []
+        def scored(lo, hi):
+            # exact rescore: float64 strict left fold, identical IEEE
+            # sequence to the original JVM expression
+            acc = Vf[lo, 0] * Vf[hi, 0]
+            for d in range(1, dim):
+                acc += Vf[lo, d] * Vf[hi, d]
+            return ids_s, lo, hi, acc
+
         for rb in batches:
             for ki in rb.column(0).to_numpy():
                 t, b = int(kt[ki]), int(kb[ki])
                 A = rid_[st[ki]:en[ki]]
                 MA = Vmm[A]
-                blocks = [(A, True)]
-                if multiprobe:
-                    for j in range(n_planes):
-                        nb = b ^ (1 << j)
-                        if nb > b and (t, nb) in lk:
-                            kj = lk[(t, nb)]
-                            blocks.append((rid_[st[kj]:en[kj]], False))
-                for B, is_self in blocks:
-                    S = MA @ (MA.T if is_self else Vmm[B].T)
-                    hit = S >= margin
-                    if is_self:
-                        # members ascend by row index -> strict upper
-                        # triangle == id_a < id_b exactly once
-                        hit &= np.triu(np.ones(S.shape, dtype=bool), k=1)
-                    bi, bj = np.nonzero(hit)
-                    if not len(bi):
+                # the bucket against itself: members ascend by position, so
+                # the strict upper triangle is id_a < id_b, each pair once
+                for i, j, _ in upper_triangle(
+                        len(A), lambda i0, i1: MA[i0:i1] @ MA[i0 + 1:].T,
+                        lambda S: S >= margin):
+                    yield scored(A[i], A[j])
+                # against each Hamming-1 neighbour bucket, from the lower key
+                for nb in (b ^ (1 << j) for j in range(n_planes) if multiprobe):
+                    kj = lk.get((t, nb))
+                    if nb < b or kj is None:
                         continue
-                    ra, rbj = A[bi], (A if is_self else B)[bj]
-                    lo = np.minimum(ra, rbj)
-                    hi = np.maximum(ra, rbj)
-                    # exact rescore: float64 strict left fold, identical
-                    # IEEE sequence to the original JVM expression
-                    acc = Vf[lo, 0] * Vf[hi, 0]
-                    for d in range(1, dim):
-                        acc += Vf[lo, d] * Vf[hi, d]
-                    out_a.append(ids_s[lo])
-                    out_b.append(ids_s[hi])
-                    out_d.append(acc)
-        if out_a:
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(np.concatenate(out_a)),
-                 pa.array(np.concatenate(out_b)),
-                 pa.array(np.concatenate(out_d))],
-                ["id_a", "id_b", "dot"])
+                    B = rid_[st[kj]:en[kj]]
+                    bi, bj = np.nonzero(MA @ Vmm[B].T >= margin)
+                    if len(bi):
+                        yield scored(np.minimum(A[bi], B[bj]),
+                                     np.maximum(A[bi], B[bj]))
 
-    par = max(8, spark.sparkContext.defaultParallelism * 2)
-    keys_df = spark.range(len(starts)).toDF("k").repartition(
-        min(par, max(1, len(starts))))
-    dots = keys_df.mapInArrow(
-        kernel, schema="id_a long, id_b long, dot double")
-    if normalized:
-        score = F.col("dot")
-    else:
-        norms = df.select(F.col(id_col).alias("nid"),
-                          _norm(F.col(vec_col)).alias("nrm"))
-        dots = (dots
-                .join(F.broadcast(norms.select(F.col("nid").alias("id_a"),
-                                               F.col("nrm").alias("na"))),
-                      "id_a")
-                .join(F.broadcast(norms.select(F.col("nid").alias("id_b"),
-                                               F.col("nrm").alias("nb"))),
-                      "id_b"))
-        score = F.col("dot") / (F.col("na") * F.col("nb"))
-    return (dots.select("id_a", "id_b", F.round(score, 4).alias("score"))
-            .filter(F.col("score") >= threshold)
-            .dropDuplicates(["id_a", "id_b"]))
+    def finish(dots: DataFrame) -> DataFrame:
+        if normalized:
+            score = F.col("dot")
+        else:
+            norms = df.select(F.col(id_col).alias("nid"),
+                              _norm(F.col(vec_col)).alias("nrm"))
+            dots = (dots
+                    .join(F.broadcast(norms.select(F.col("nid").alias("id_a"),
+                                                   F.col("nrm").alias("na"))),
+                          "id_a")
+                    .join(F.broadcast(norms.select(F.col("nid").alias("id_b"),
+                                                   F.col("nrm").alias("nb"))),
+                          "id_b"))
+            score = F.col("dot") / (F.col("na") * F.col("nb"))
+        return (dots.select("id_a", "id_b", F.round(score, 4).alias("score"))
+                .filter(F.col("score") >= threshold)
+                .dropDuplicates(["id_a", "id_b"]))
+
+    return pair_kernel(
+        df.sparkSession, len(starts), kernel, df.schema[id_col].dataType,
+        "dot double", finish=finish,
+        payload=(ids, V, Vm, rid, starts, ends, key_t, key_b, lookup))
 
 
 def _collect_vector_matrix(df: DataFrame, id_col: str, vec_col: str):
-    """(sorted_ids int64, V float64[n, dim]) for a gather-dot broadcast, or
-    None when the corpus has ragged dims (caller falls back to the JVM
-    path)."""
+    """(id index, V float64[n, dim] in index order) for the kernel
+    broadcast, or None when vectors are null or of ragged dims (the caller
+    falls back to the join plan)."""
     import numpy as np
+    import pyarrow.compute as pc
 
-    pdf = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v")).toPandas()
-    ids = pdf["id"].to_numpy(np.int64)
-    try:
-        # float32 -> float64 is exact regardless of route, double passes
-        # through unchanged — matches Catalyst's x.cast("double") exactly
-        V = np.array(pdf["v"].tolist(), dtype=np.float64)
-    except ValueError:
+    t = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v")).toArrow()
+    v = t.column("v").combine_chunks()
+    dims = pc.min_max(pc.list_value_length(v))
+    if v.null_count or dims["min"] != dims["max"]:
         return None
-    if V.ndim != 2:
-        return None
-    order = np.argsort(ids, kind="stable")
-    return ids[order], V[order]
+    ids = id_index(t.column("id"))
+    # float32 -> float64 is exact, double passes through unchanged — matches
+    # Catalyst's x.cast("double") exactly
+    V = np.empty((len(ids), dims["max"].as_py() or 0))
+    V[positions(ids, t.column("id"))] = np.asarray(
+        v.flatten(), dtype=np.float64).reshape(len(v), V.shape[1])
+    return ids, V
 
 
 def cosine_near_pairs(df: DataFrame, threshold: float = 0.9,
@@ -378,45 +314,55 @@ def cosine_near_pairs(df: DataFrame, threshold: float = 0.9,
     method='lsh':  candidates = pairs whose NARROW (id, tbl, bucket) rows
     collide in >=1 table, with one side additionally probing Hamming-1
     buckets (multi-probe), then exact verification on vectors joined back by
-    id — same sizing rules and scale rationale as lsh_cosine_topk."""
+    id — same sizing rules and scale rationale as lsh_cosine_topk. When the
+    vectors fit pairs.KERNEL_BUDGET_BYTES (n x dim bytes, known only for a
+    bare-scan input) the bucket-block GEMM kernel of _lsh_block_pairs
+    scores the same candidates in place of the join (same rows).
+
+    A zero vector has no cosine: zero-norm vectors are excluded up front,
+    for both methods and both LSH routes."""
+    from openlogparse_spark.functions.dedup import _cheap_count
+
+    # auto-sizing and routing need the corpus count — but ONLY when the input
+    # is a bare scan (± filter/project), where it is one cheap columnar pass.
+    # On a derived lineage an eager count here would silently execute the
+    # whole upstream plan outside any cache (the round-3 trap jaccard/simhash
+    # /ivf were cured of), so demand an explicit n_planes instead — same
+    # error contract as ivf_topk's n_centroids — and take the join plan.
+    n = _cheap_count(df.select(id_col)) if method == "lsh" else None
+    if method == "lsh" and n_planes is None:
+        if n is None:
+            raise ValueError(
+                "cosine_near_pairs(method='lsh'): input is a derived "
+                "plan — pass n_planes explicitly (auto-sizing would "
+                "require an eager count over the whole upstream lineage)")
+        n_planes = auto_n_planes(n, threshold, n_tables)
+    df = df.filter(_norm(F.col(vec_col)) > 0)
     sig = None
-    n = None
     if method == "brute":
         a = df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"))
         b = df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"))
         cand = a.join(b, F.col("id_a") < F.col("id_b"))
     else:
-        if n_planes is None:
-            # auto-size from threshold + corpus count — but ONLY when the
-            # input is a bare scan (± filter/project), where the count is one
-            # cheap columnar pass. On a derived lineage an eager count here
-            # would silently execute the whole upstream plan outside any
-            # cache (the round-3 trap jaccard/simhash/ivf were cured of), so
-            # demand an explicit n_planes instead — same error contract as
-            # ivf_topk's n_centroids.
-            from openlogparse_spark.functions.dedup import _cheap_count
-
-            n = _cheap_count(df.select(id_col))
-            if n is None:
-                raise ValueError(
-                    "cosine_near_pairs(method='lsh'): input is a derived "
-                    "plan — pass n_planes explicitly (auto-sizing would "
-                    "require an eager count over the whole upstream lineage)")
-            n_planes = auto_n_planes(n, threshold, n_tables)
         # On a low-threshold / near-uniform corpus the OR-amplified candidate
         # set approaches all-pairs (measured at sf1.0: 184M joined rows, 121M
         # DISTINCT pairs of a 200M-pair corpus), and producing them through a
-        # join dominates the whole query. When the corpus fits a broadcast
-        # (size-guarded), skip candidate materialization entirely: the
-        # bucket-block GEMM kernel scores every (exact, Hamming-1) bucket
-        # pair in place and only above-threshold survivors leave the tasks.
+        # join dominates the whole query; the kernel skips candidate
+        # materialization and only above-threshold survivors leave the tasks.
+        est = None
+        if n is not None:
+            row = df.select(F.size(vec_col)).first()
+            # ids + per-table bucket rows + the exact f64 vectors (and their
+            # f32 GEMM copy unless already normalized)
+            est = n * (8 * (1 + n_tables)
+                       + (row[0] if row else 0) * (8 if normalized else 12))
         mat = None
-        if n is None:
-            from openlogparse_spark.functions.dedup import _cheap_count
-
-            n = _cheap_count(df.select(id_col))
-        if n is not None and n <= _GATHER_KERNEL_MAX_VECTORS:
+        if use_kernel("cosine_near_pairs", est,
+                      "derived input: size unknown without an eager pass"):
             mat = _collect_vector_matrix(df, id_col, vec_col)
+            if mat is None:
+                log_route("cosine_near_pairs", "join plan",
+                          "null or ragged vectors")
         if mat is not None:
             return _lsh_block_pairs(df, mat, n_planes, n_tables, multiprobe,
                                     seed, threshold, normalized,

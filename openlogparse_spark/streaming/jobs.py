@@ -179,7 +179,11 @@ def stream_routed_sink(dims_dir: str, sinks_root: str,
         dim_tools = spark.read.parquet(os.path.join(dims_dir, "dim_tools.parquet"))
         routes = (spark.read.parquet(os.path.join(dims_dir, "routes.parquet"))
                   .toPandas().to_dict("records"))
-        enriched = batch_df.join(F.broadcast(dim_tools), "tool", "left")
+        # a batch that stream_parse_enrich already enriched carries the dim
+        # columns: drop them so the refreshed dictionary wins and route
+        # conditions on them stay unambiguous
+        stale = [c for c in dim_tools.columns if c != "tool"]
+        enriched = batch_df.drop(*stale).join(F.broadcast(dim_tools), "tool", "left")
         tags = F.array(*[
             F.when(compile_route_filter(r["template_pattern"], r["condition"]),
                    F.lit(r["route_id"]))

@@ -84,7 +84,7 @@ def test_cosine_topk_exact(spark):
     assert res[0]["score"] <= 1.0
 
 
-def test_simhash_blocking_is_lossless_at_h8(spark):
+def test_simhash_blocking_is_lossless_at_h8(spark, monkeypatch):
     """Brute-force oracle at the DRIVER parameters (max_hamming=8): blocking
     with n_chunks = h+1 must return exactly the pairs a full O(n²) scan
     finds — the pigeonhole guarantee, asserted as set equality."""
@@ -100,50 +100,57 @@ def test_simhash_blocking_is_lossless_at_h8(spark):
                for r in simhash_near_pairs(docs, max_hamming=8).collect()}
     assert blocked == brute
     assert len(brute) > 0  # corpus actually exercises the path
-    # BOTH explicit blocking modes must return the identical set — the
-    # classic single-chunk and the multi-index (chunk-pair) blocking are
-    # each pigeonhole-lossless (the default auto-selects between them by
-    # corpus size, so neither mode is covered by the default alone)
-    for ac in (1, 2):
+    # BOTH blocking modes must return the identical set — the classic
+    # single-chunk and the multi-index (chunk-pair) blocking are each
+    # pigeonhole-lossless (the default picks one by corpus size, so neither
+    # mode is covered by the default alone); the crossover constant forces
+    # each in turn
+    from openlogparse_spark.functions import dedup as dd
+
+    for min_docs in (10**9, 0):
+        monkeypatch.setattr(dd, "_SIMHASH_MULTI_INDEX_MIN_DOCS", min_docs)
         mode = {(r["id_a"], r["id_b"]): r["hamming"]
-                for r in simhash_near_pairs(docs, max_hamming=8,
-                                            agree_chunks=ac).collect()}
-        assert mode == brute, f"agree_chunks={ac}"
+                for r in simhash_near_pairs(docs, max_hamming=8).collect()}
+        assert mode == brute, f"_SIMHASH_MULTI_INDEX_MIN_DOCS={min_docs}"
 
 
 def test_simhash_auto_selects_blocking_mode(spark, docs, monkeypatch):
-    """agree_chunks=None picks single-chunk below the corpus-size crossover
+    """The mode is picked by corpus size: single-chunk below the crossover
     and chunk-pair above it; both sides of the switch give the same answer."""
     from openlogparse_spark.functions import dedup as dd
 
-    explicit1 = {(r["id_a"], r["id_b"]) for r in
-                 simhash_near_pairs(docs, max_hamming=3, agree_chunks=1).collect()}
     auto_small = {(r["id_a"], r["id_b"]) for r in
                   simhash_near_pairs(docs, max_hamming=3).collect()}
-    assert auto_small == explicit1
-    # drop the crossover to 0: auto now selects the multi-index mode
+    # raise the crossover out of reach: single-chunk blocking for sure
+    monkeypatch.setattr(dd, "_SIMHASH_MULTI_INDEX_MIN_DOCS", 10**9)
+    single = {(r["id_a"], r["id_b"]) for r in
+              simhash_near_pairs(docs, max_hamming=3).collect()}
+    assert auto_small == single
+    # drop the crossover to 0: the size now selects the multi-index mode
     monkeypatch.setattr(dd, "_SIMHASH_MULTI_INDEX_MIN_DOCS", 0)
     auto_large = {(r["id_a"], r["id_b"]) for r in
                   simhash_near_pairs(docs, max_hamming=3).collect()}
-    assert auto_large == explicit1   # mode switch never changes the answer
+    assert auto_large == single   # mode switch never changes the answer
 
 
-def test_minhash_narrow_shape_and_mode_equality(spark, docs):
-    """narrow=True (the 100 TB shape): the band self-join exchanges carry
+def test_minhash_narrow_shape_and_mode_equality(spark, docs, monkeypatch):
+    """The narrow shape (the 100 TB one): the band self-join exchanges carry
     only (id, band, bh) — never the 64-long signature, which joins back by
     id only for surviving candidates (round-3 verdict item: KB-scale vs
     sig-payload shuffle). And the two shapes are the same operator: wide
-    (small-corpus default) and narrow return identical pairs."""
-    mh = minhash_lsh_pairs(docs, threshold=0.5, narrow=True)
+    (the small-corpus pick) and narrow return identical pairs."""
+    from openlogparse_spark.functions import dedup as dd
+
+    rows = lambda df: {(r["id_a"], r["id_b"], r["est_jaccard"])  # noqa: E731
+                       for r in df.collect()}
+    wide = rows(minhash_lsh_pairs(docs, threshold=0.5))   # tiny corpus -> wide
+    monkeypatch.setattr(dd, "_NARROW_SHUFFLE_MIN_DOCS", 0)
+    mh = minhash_lsh_pairs(docs, threshold=0.5)
     plan = mh._jdf.queryExecution().executedPlan().toString()
     for line in plan.splitlines():
         if "hashpartitioning(band" in line or "hashpartitioning(bh" in line:
             assert "sig" not in line, line
-    rows = lambda df: {(r["id_a"], r["id_b"], r["est_jaccard"])  # noqa: E731
-                       for r in df.collect()}
-    assert rows(mh) == rows(minhash_lsh_pairs(docs, threshold=0.5, narrow=False))
-    # auto (None) picks one of the two — tiny corpus -> wide — same answer
-    assert rows(mh) == rows(minhash_lsh_pairs(docs, threshold=0.5))
+    assert rows(mh) == wide
 
 
 def test_jaccard_probe_goes_through_the_cache(spark):
@@ -268,7 +275,7 @@ def test_expensive_generators_not_recomputed_below_widen_exchange(spark, docs):
         assert "lambdafunction" not in below, below
 
 
-def test_selfjoin_caches_released(spark, docs):
+def test_selfjoin_caches_released(spark, docs, monkeypatch):
     """Pair operators persist() their self-join input; the cache must not
     outlive the returned plan (round-2 ADVICE: long-lived drivers leak one
     cached subtree per invocation)."""
@@ -291,55 +298,152 @@ def test_selfjoin_caches_released(spark, docs):
     del res2                             # GC path: result dropped => released
     gc.collect()
     assert n_cached() == base
-    # the kernel path leaves nothing cached at all
-    res3 = jaccard_pairs(docs, n=3, threshold=0.5)
+    # the kernel path leaves nothing cached at all, and once released no
+    # live broadcast behind: its payload blocks leave the driver too
+    sc = spark.sparkContext
+    made = []
+
+    def spy(value):
+        made.append(real(value))
+        return made[-1]
+
+    real = sc.broadcast
+    with monkeypatch.context() as m:
+        m.setattr(sc, "broadcast", spy)
+        res3 = jaccard_pairs(docs, n=3, threshold=0.5)
     res3.collect()
     assert n_cached() == base
+    assert len(made) == 1
+    bm = spark._jvm.org.apache.spark.SparkEnv.get().blockManager()
+    block = spark._jvm.org.apache.spark.storage.BroadcastBlockId(
+        made[0]._jbroadcast.id(), "")
+    assert bm.getStatus(block).isDefined()
+    res3.release_cached_inputs()
+    assert not bm.getStatus(block).isDefined()
+    assert not made[0]._jbroadcast.isValid()
 
 
-def test_lsh_gemm_path_matches_join_plan(spark):
+def test_lsh_gemm_path_matches_join_plan(spark, tmp_path, monkeypatch):
     """cosine_near_pairs(method='lsh') bucket-block GEMM path must return
     EXACTLY the join plan's rows — same pairs, bit-identical rounded scores
     (the GEMM is only a margin pre-filter; survivors are re-scored with the
-    exact float64 fold and filtered JVM-side)."""
-    from openlogparse_spark.functions import similarity as sim
+    exact float64 fold and filtered JVM-side). The corpus carries a zero
+    vector: it has no cosine, so every route drops it the same way (the join
+    plan used to abort on it with DIVIDE_BY_ZERO under ANSI mode)."""
+    from openlogparse_spark.functions import pairs
+    from openlogparse_spark.functions.similarity import cosine_near_pairs
 
     emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    gemm = {(r["id_a"], r["id_b"]): r["score"]
-            for r in sim.cosine_near_pairs(emb, threshold=0.35,
-                                           method="lsh").collect()}
-    old_lim = sim._GATHER_KERNEL_MAX_VECTORS
-    sim._GATHER_KERNEL_MAX_VECTORS = -1   # force the join plan
-    try:
-        join = {(r["id_a"], r["id_b"]): r["score"]
-                for r in sim.cosine_near_pairs(emb, threshold=0.35,
-                                               method="lsh").collect()}
-    finally:
-        sim._GATHER_KERNEL_MAX_VECTORS = old_lim
+    zero = spark.createDataFrame([(10**6, [0.0] * 64, 0)], emb.schema)
+    # written back as one bare scan, so the size guard can see its size
+    emb.unionByName(zero).write.parquet(str(tmp_path / "emb"))
+    emb = spark.read.parquet(str(tmp_path / "emb"))
+    rows = lambda df: {(r["id_a"], r["id_b"]): r["score"]  # noqa: E731
+                       for r in df.collect()}
+    gemm = rows(cosine_near_pairs(emb, threshold=0.35, method="lsh"))
+    monkeypatch.setattr(pairs, "KERNEL_BUDGET_BYTES", -1)   # force the join plan
+    join = rows(cosine_near_pairs(emb, threshold=0.35, method="lsh"))
     assert gemm == join
     assert len(gemm) > 0
+    brute = rows(cosine_near_pairs(emb, threshold=0.35, method="brute"))
+    assert gemm.items() <= brute.items()
+    assert not any(10**6 in k for k in brute)
 
 
-def test_jaccard_index_kernel_matches_join_plan(spark, docs):
+def test_lsh_byte_budget_routes_wide_vectors_to_join(spark, tmp_path,
+                                                     monkeypatch, caplog):
+    """The LSH size guard counts BYTES, not vectors: with the budget below
+    n x 768 x 8 a 768-dim corpus takes the join plan, says why at INFO, and
+    returns the kernel's rows."""
+    import logging
+
+    import numpy as np
+
+    from openlogparse_spark.functions import pairs
+    from openlogparse_spark.functions.similarity import cosine_near_pairs
+
+    rng = np.random.default_rng(7)
+    base = rng.standard_normal((60, 768))
+    vecs = np.concatenate([base, base[:20] + 0.1 * rng.standard_normal((20, 768))])
+    spark.createDataFrame(
+        [(i, v.tolist()) for i, v in enumerate(vecs)],
+        "vec_id long, embedding array<double>",
+    ).write.parquet(str(tmp_path / "wide"))
+    emb = spark.read.parquet(str(tmp_path / "wide"))
+    rows = lambda df: {(r["id_a"], r["id_b"]): r["score"]  # noqa: E731
+                       for r in df.collect()}
+    caplog.set_level(logging.INFO, logger=pairs.__name__)
+    kernel = rows(cosine_near_pairs(emb, threshold=0.8, method="lsh"))
+    assert "cosine_near_pairs: kernel" in caplog.text
+    caplog.clear()
+    monkeypatch.setattr(pairs, "KERNEL_BUDGET_BYTES", len(vecs) * 768 * 8 - 1)
+    join = rows(cosine_near_pairs(emb, threshold=0.8, method="lsh"))
+    assert "cosine_near_pairs: join plan (~" in caplog.text
+    assert "budget" in caplog.text
+    assert join == kernel
+    assert len(kernel) >= 15
+
+
+def test_jaccard_index_kernel_matches_join_plan(spark, docs, monkeypatch):
     """The broadcast inverted-index kernel (bare-scan capped builds) must
     return EXACTLY the join plan's rows — same pairs, bit-identical rounded
     jaccard — including when the df cap binds."""
-    from openlogparse_spark.functions import dedup as dd
+    from openlogparse_spark.functions import pairs
 
     for cap in (10_000, 40):   # cap inert / cap binds (fixture max df > 40)
         kern = {(r["id_a"], r["id_b"]): r["jaccard"]
                 for r in jaccard_pairs(docs, n=3, threshold=0.2,
                                        max_shingle_df=cap).collect()}
-        old_lim = dd._JACCARD_INDEX_MAX_DOCS
-        dd._JACCARD_INDEX_MAX_DOCS = -1   # force the self-join plan
-        try:
+        with monkeypatch.context() as m:
+            m.setattr(pairs, "KERNEL_BUDGET_BYTES", -1)   # force the self-join plan
             join = {(r["id_a"], r["id_b"]): r["jaccard"]
                     for r in jaccard_pairs(docs, n=3, threshold=0.2,
                                            max_shingle_df=cap).collect()}
-        finally:
-            dd._JACCARD_INDEX_MAX_DOCS = old_lim
         assert kern == join, f"cap={cap}"
     assert len(kern) > 0
+
+
+def test_upper_triangle_covers_each_pair_once(monkeypatch):
+    """The blockwise loop the simhash and LSH kernels share yields every
+    i < j pair of a bucket once, with its score, across row-block edges."""
+    import numpy as np
+
+    from openlogparse_spark.functions import pairs
+
+    monkeypatch.setattr(pairs, "TRIANGLE_BLOCK", 7)
+    x = np.arange(50)
+    got = [(int(i), int(j), int(v)) for gi, gj, S in pairs.upper_triangle(
+        50, lambda i0, i1: x[i0:i1, None] + x[None, i0 + 1:], lambda S: S % 3 > 0)
+        for i, j, v in zip(gi, gj, S)]
+    assert sorted(got) == [(i, j, i + j) for i in range(50)
+                           for j in range(i + 1, 50) if (i + j) % 3]
+
+
+@pytest.mark.parametrize("budget", [None, -1], ids=["kernel", "join"])
+def test_pair_operators_accept_string_ids(spark, monkeypatch, budget):
+    """jaccard, simhash and embedding-LSH pairs on ids cast to string equal
+    the integer-id result mapped to strings, as unordered pairs with their
+    values — on the kernel and the join route (string order differs from
+    integer order: '10' < '9')."""
+    from openlogparse_spark.functions import pairs
+    from openlogparse_spark.functions.similarity import cosine_near_pairs
+
+    if budget is not None:
+        monkeypatch.setattr(pairs, "KERNEL_BUDGET_BYTES", budget)
+    docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
+    emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
+    ops = [
+        (lambda d, c: jaccard_pairs(d, n=3, threshold=0.2, id_col=c), docs, "doc_id"),
+        (lambda d, c: simhash_near_pairs(d, max_hamming=8, id_col=c), docs, "doc_id"),
+        (lambda d, c: cosine_near_pairs(d, threshold=0.35, method="lsh", id_col=c),
+         emb, "vec_id"),
+    ]
+    for op, df, col in ops:
+        as_int = {frozenset((str(r[0]), str(r[1]))): r[2] for r in op(df, col).collect()}
+        as_str = {frozenset((r[0], r[1])): r[2] for r in op(
+            df.withColumn("sid", F.col(col).cast("string")).drop(col), "sid").collect()}
+        assert as_str == as_int
+        assert len(as_int) > 0
 
 
 def test_cdc_changed_to_null_kept_in_wire_image(spark):
@@ -510,21 +614,6 @@ def test_multimodal_real_audio_kernel(spark):
     # synthetic_media's audio rows ride the same real kernel
     feats = extract_features(synthetic_media(spark, n=12)).collect()
     assert all(r["feat"] is not None for r in feats if r["kind"] == "audio")
-
-
-def test_simhash_pack_variants_are_bit_identical(spark):
-    """pack=2/4 rearrange the vote aggregation into fewer, packed buffers
-    (the codegen-size mitigation for the slow-JIT sessions, round-4 verdict
-    #2) — the resulting 64-bit signatures must be IDENTICAL to stock pack=1
-    on real fixture text."""
-    docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
-    base = {r["id"]: r["simhash"] for r in simhash(docs).collect()}
-    assert base
-    for p in (2, 4):
-        got = {r["id"]: r["simhash"] for r in simhash(docs, pack=p).collect()}
-        assert got == base, f"pack={p} diverged"
-    with pytest.raises(ValueError, match="pack"):
-        simhash(docs, pack=3)
 
 
 def test_winnow_fingerprint_is_edit_local(spark):

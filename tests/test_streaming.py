@@ -145,6 +145,34 @@ def test_stream_dictionary_refresh_mid_stream(spark, fx_dir):
     assert pd.Timestamp(row["watermark"]) == pd.Timestamp(actual)
 
 
+def test_stream_enrich_composes_with_routed_sink(spark, stream_input, templates, fx_dir):
+    """stream_parse_enrich feeds foreachBatch(stream_routed_sink) as is: the
+    sink's per-batch dictionary join replaces the dim columns the stream
+    already carries, so route conditions on them (r_net reads `category`)
+    resolve and route the same rows as a batch run."""
+    import pandas as pd
+
+    from openlogparse_spark.route import compile_route_filter
+    from openlogparse_spark.streaming.jobs import stream_routed_sink
+
+    root = os.path.join(TMP, "compose")
+    shutil.rmtree(root, ignore_errors=True)
+    sinks = os.path.join(root, "sinks")
+    dim_tools = spark.read.parquet(os.path.join(fx_dir, "dim_tools.parquet"))
+    parsed = stream_parse_enrich(stream_source(spark, stream_input), templates, dim_tools)
+    _drain(parsed.writeStream.foreachBatch(stream_routed_sink(fx_dir, sinks))
+           .option("checkpointLocation", os.path.join(root, "ck")).start())
+    got = {r["route_id"]: r["count"] for r in
+           spark.read.parquet(sinks).groupBy("route_id").count().collect()}
+    batch = stream_parse_enrich(spark.read.parquet(stream_input), templates, dim_tools)
+    routes = pd.read_parquet(os.path.join(fx_dir, "routes.parquet")).to_dict("records")
+    exp = {r["route_id"]: batch.filter(
+        compile_route_filter(r["template_pattern"], r["condition"])).count()
+        for r in routes}
+    assert got == {k: n for k, n in exp.items() if n}
+    assert got["r_net"] > 0
+
+
 def test_stream_sessions_close_and_timeout(spark, stream_input):
     stream = stream_source(spark, stream_input)
     sessions = stream_conversation_sessions(stream)
